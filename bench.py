@@ -103,13 +103,13 @@ def main() -> None:
     timings["cpu_scaling_probe"] = round(time.perf_counter() - t0, 3)
 
     # The chain family (q_chain2/5/cap/converge, q_disp, q_label, ...)
-    # shares the per-application iteration cache (chain_centroids), so
+    # shares one memoized chain fit per application (chain_centroids), so
     # without an explicit warmup each member's number depends on which
     # one happens to run FIRST — and alphabetical position shifts as
     # the registry grows (r3's new q_chain_cap silently absorbed the
     # cost q_chain_converge paid in r1, inflating apparent drift).
-    # Warm the deepest prefix once as its own timed entry; family
-    # members then measure only their terminal work, reproducibly.
+    # Warm the chain once as its own timed entry; family members then
+    # measure only their terminal work, reproducibly.
     from mapreduce_kmeans_clustering_spark.queries import (
         CONVERGE_CAP,
         chain_centroids,

@@ -24,13 +24,12 @@ from pyspark.sql import functions as F
 
 def update_centroids(assigned: DataFrame) -> DataFrame:
     """assigned(cluster,x,y,z) -> centroids(id, x, y, z), unweighted
-    arithmetic mean per cluster (Task1.java:85-97), ordered by id for
-    positional parity with the reference's shuffle-sorted output
-    (SURVEY §1.3.5)."""
-    return (
-        assigned.groupBy(F.col("cluster").alias("id"))
-        .agg(F.avg("x").alias("x"), F.avg("y").alias("y"), F.avg("z").alias("z"))
-        .orderBy("id")
+    arithmetic mean per cluster (Task1.java:85-97), in no particular
+    order: callers that need the reference's id order (SURVEY §1.3.5)
+    sort the K collected rows on the driver, as ``lloyd_iteration``
+    does."""
+    return assigned.groupBy(F.col("cluster").alias("id")).agg(
+        F.avg("x").alias("x"), F.avg("y").alias("y"), F.avg("z").alias("z")
     )
 
 

@@ -7,7 +7,6 @@ from mapreduce_kmeans_clustering_spark.plans.kmeans import (
     lloyd_iteration,
 )
 from mapreduce_kmeans_clustering_spark.plans.kmeans_nd import (
-    NdFitResult,
     assign_nd,
     fit_nd,
     init_farthest_nd,
@@ -22,7 +21,6 @@ __all__ = [
     "init_farthest",
     "label",
     "lloyd_iteration",
-    "NdFitResult",
     "assign_nd",
     "fit_nd",
     "init_farthest_nd",

@@ -3,9 +3,10 @@
 The reference chains one Hadoop job per iteration, crossing the
 filesystem twice per step (seed file read by every map task, output
 read back by the driver — Task5A.java:154-209). Here an iteration is
-one job: ``assign`` (scan-local projection) + ``update_centroids``
-(partial-agg groupBy) + a K-row ``collect``. State between iterations
-is the K-row centroid list on the driver; no filesystem round-trip.
+2 Spark jobs (measured, adaptive execution on): ``assign`` (scan-local
+projection) + ``update_centroids`` (partial-agg groupBy), then the final
+aggregate and a K-row ``collect``. State between iterations is the K-row
+centroid list on the driver; no filesystem round-trip.
 
 Scale notes (100 TB target):
 - per iteration the points relation is scanned once; the only shuffle
@@ -21,9 +22,12 @@ Scale notes (100 TB target):
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from mapreduce_kmeans_clustering_spark.operators.aggregate import update_centroids
 from mapreduce_kmeans_clustering_spark.operators.assign import assign
@@ -31,13 +35,16 @@ from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid
 
 DEFAULT_MAX_ITER = 30  # Task3.java:192
 DEFAULT_THRESHOLD = 5.0  # Task3.java:193
+_EMPTY_INPUT = "cannot fit an empty relation: there is no row to assign"
 
 
 def displacement(prev: list[Centroid], curr: list[Centroid], strict: bool = True) -> float:
     """Convergence metric (Task3.java:116-128): SUM over clusters of
     Euclidean displacement between consecutive centroid lists —
     positional zip over id-sorted lists, valid because ids are stable
-    line indices (SURVEY §1.3.5).
+    line indices (SURVEY §1.3.5). The squares are written ``d * d``,
+    the same arithmetic as the DuckDB chain oracle, so both engines
+    sum identical doubles.
 
     ``strict`` reproduces Task5A.java:138-140: a size mismatch (a
     cluster emptied out and K shrank) raises instead of comparing.
@@ -51,30 +58,74 @@ def displacement(prev: list[Centroid], curr: list[Centroid], strict: bool = True
         pairs = [(prev_by_id[c.id], c) for c in curr if c.id in prev_by_id]
     else:
         pairs = list(zip(sorted(prev), sorted(curr)))
-    return sum(
-        math.sqrt((a.x - b.x) ** 2 + (a.y - b.y) ** 2 + (a.z - b.z) ** 2)
-        for a, b in pairs
-    )
+    deltas = [(a.x - b.x, a.y - b.y, a.z - b.z) for a, b in pairs]
+    return sum(math.sqrt(dx * dx + dy * dy + dz * dz) for dx, dy, dz in deltas)
 
 
-def lloyd_iteration(points: DataFrame, centroids: list[Centroid]) -> list[Centroid]:
-    """One Lloyd step: assign + per-cluster mean, K rows collected.
+def lloyd_iteration(
+    points: DataFrame, centroids: list[Centroid], round_decimals: int | None = None
+) -> list[Centroid]:
+    """One Lloyd step: assign + per-cluster mean (Spark-rounded to
+    ``round_decimals`` in the plan, if set), K rows collected and sorted
+    by id on the driver — an ``orderBy`` in the plan cost two more jobs.
 
     Empty clusters drop out (no groupBy key), shrinking K exactly like
     the reference (SURVEY §1.3.4).
     """
-    assigned = assign(points, centroids, keep_cols=["x", "y", "z"])
-    rows = update_centroids(assigned).collect()
-    return [Centroid(int(r["id"]), r["x"], r["y"], r["z"]) for r in rows]
+    upd = update_centroids(assign(points, centroids, keep_cols=["x", "y", "z"]))
+    if round_decimals is not None:
+        upd = upd.select(
+            "id", *(F.round(c, round_decimals).alias(c) for c in ("x", "y", "z"))
+        )
+    return sorted(Centroid(int(r["id"]), r["x"], r["y"], r["z"]) for r in upd.collect())
 
 
 @dataclass
 class FitResult:
-    centroids: list[Centroid]
+    """Centroids are ``Centroid`` lists for ``fit`` and vector lists
+    (index == cluster id) for ``fit_nd``; ``history[i]`` is the list
+    after step i + 1. No threshold, no ``displacements``."""
+
+    centroids: list
     iterations: int  # number of Lloyd steps executed
     converged: bool
     displacements: list[float] = field(default_factory=list)
-    history: list[list[Centroid]] = field(default_factory=list)
+    history: list[list] = field(default_factory=list)
+
+
+def _lloyd(
+    points: DataFrame,
+    seeds: list,
+    step: Callable[[DataFrame, list], list],
+    moved: Callable[[list, list], float],
+    max_iter: int,
+    threshold: float | None,
+) -> FitResult:
+    """The one Lloyd loop (``fit``, ``fit_nd``, the oracle chain):
+    ``step(points, centroids)`` returns the next centroid list and
+    ``moved(prev, curr)`` its summed displacement, computed only when
+    ``threshold`` is set. Stop rule of Task3.java:198-212: stop AFTER
+    the first iteration whose displacement is below ``threshold``,
+    keeping that iteration's centroids.
+    """
+    if not seeds:
+        raise ValueError(_EMPTY_INPUT if points.isEmpty() else "empty centroid list")
+    curr = list(seeds)
+    result = FitResult(centroids=curr, iterations=0, converged=False)
+    for _ in range(max_iter):
+        prev, curr = curr, step(points, curr)
+        if not curr:  # every row is assigned somewhere unless there is none
+            raise ValueError(_EMPTY_INPUT)
+        result.iterations += 1
+        result.history.append(curr)
+        if threshold is not None:
+            d = moved(prev, curr)
+            result.displacements.append(d)
+            if d < threshold:
+                result.converged = True
+                break
+    result.centroids = curr
+    return result
 
 
 def fit(
@@ -82,8 +133,7 @@ def fit(
     seeds: list[Centroid],
     max_iter: int = DEFAULT_MAX_ITER,
     threshold: float | None = DEFAULT_THRESHOLD,
-    strict_size: bool = True,
-    keep_history: bool = False,
+    round_decimals: int | None = None,
 ) -> FitResult:
     """Run Lloyd iterations until the summed displacement drops below
     ``threshold`` or ``max_iter`` is hit.
@@ -92,26 +142,14 @@ def fit(
     - Task2  == fit(max_iter=5, threshold=None)
     - Task3/4/5A/5B == fit(max_iter=30, threshold=5.0)
 
-    Convergence check order matches Task3.java:198-212: run iteration
-    i, compare to iteration i-1's centroids, stop AFTER the iteration
-    whose displacement is below threshold (the converged centroids are
-    included).
+    With a threshold, a cluster that empties out raises (strict
+    displacement, Task5A.java:138-140). ``round_decimals`` rounds the centroids
+    between iterations with Spark's ``round``, which is HALF_UP on the
+    decimal value (5e-7 -> 1e-06, where Python's ``round`` gives 0.0);
+    the oracle chain in ``queries`` runs with 6.
     """
-    curr = list(seeds)
-    result = FitResult(centroids=curr, iterations=0, converged=False)
-    for _ in range(max_iter):
-        prev, curr = curr, lloyd_iteration(points, curr)
-        result.iterations += 1
-        if keep_history:
-            result.history.append(curr)
-        if threshold is not None:
-            d = displacement(prev, curr, strict=strict_size)
-            result.displacements.append(d)
-            if d < threshold:
-                result.converged = True
-                break
-    result.centroids = curr
-    return result
+    step = partial(lloyd_iteration, round_decimals=round_decimals)
+    return _lloyd(points, seeds, step, displacement, max_iter, threshold)
 
 
 def init_farthest(
@@ -137,8 +175,6 @@ def init_farthest(
     ``start`` defaults to the minimum (x, y, z) row — any fixed rule
     works; this one needs no extra pass.
     """
-    from pyspark.sql import functions as F
-
     from mapreduce_kmeans_clustering_spark.functions.literals import norm_lit
 
     if k < 1:

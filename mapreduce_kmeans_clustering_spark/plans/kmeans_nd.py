@@ -23,23 +23,15 @@ Physical design per iteration:
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_kmeans_clustering_spark.functions.literals import const_vec
+from mapreduce_kmeans_clustering_spark.plans.kmeans import FitResult, _lloyd
 
 DEFAULT_MAX_ITER = 20
 DEFAULT_THRESHOLD = 1e-4
-
-
-@dataclass
-class NdFitResult:
-    centroids: list[list[float]]  # index == cluster id
-    iterations: int
-    converged: bool
-    displacements: list[float] = field(default_factory=list)
 
 
 def seed_centroids_nd(
@@ -337,35 +329,30 @@ def fit_nd(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seeds: list[list[float]] | None = None,
-) -> NdFitResult:
-    """Lloyd loop with summed-Euclidean-displacement early stop; same
-    control flow as the 3-D fit (Task3.java:185-218 pattern).
-    ``seeds`` overrides the default first-k-by-id seeding (pass
-    ``init_farthest_nd(...)`` for spread-out deterministic seeds)."""
-    curr = seeds if seeds is not None else seed_centroids_nd(vectors, k, id_col, vec_col)
-    dim = len(curr[0])
-    result = NdFitResult(centroids=curr, iterations=0, converged=False)
-    for _ in range(max_iter):
-        # fused assign+partial-sum step (lloyd_partials_nd): the Arrow
-        # boundary moves k rows per batch instead of n vectors —
-        # measured 0.8 s -> 0.3 s per iteration over 5k x 64 at sf0.1.
-        # updated cluster ids index `curr`; compare positionally against
-        # it, then re-index (a dropped cluster shrinks K, like the
-        # reference's vanishing reducer keys).
-        updated = lloyd_partials_nd(vectors, curr, vec_col)
-        result.iterations += 1
-        d = sum(
-            math.sqrt(sum((a - b) ** 2 for a, b in zip(curr[cid], vec)))
-            for cid, vec in updated
+) -> FitResult:
+    """The 3-D ``fit``'s loop (``plans.kmeans._lloyd``) around the fused
+    Arrow step ``lloyd_partials_nd``, whose boundary moves k rows per
+    batch instead of n vectors (0.8 s -> 0.3 s per iteration over
+    5k x 64 at sf0.1). ``seeds`` overrides the first-k-by-id seeding
+    (pass ``init_farthest_nd(...)`` for spread-out deterministic seeds).
+    The displacement tolerates a shrinking K: each surviving cluster is
+    compared, by index, with the centroid it came from."""
+    kept: list[int] = []  # the last step's cluster ids: indices into its input
+
+    def step(vecs: DataFrame, cents: list[list[float]]) -> list[list[float]]:
+        updated = lloyd_partials_nd(vecs, cents, vec_col)
+        kept[:] = [cid for cid, _ in updated]
+        return [vec for _, vec in updated]
+
+    def moved(prev: list[list[float]], curr: list[list[float]]) -> float:
+        return sum(
+            math.sqrt(sum((a - b) ** 2 for a, b in zip(prev[cid], vec)))
+            for cid, vec in zip(kept, curr)
         )
-        curr = [vec for _, vec in updated]
-        if threshold is not None:
-            result.displacements.append(d)
-            if d < threshold:
-                result.converged = True
-                break
-    result.centroids = curr
-    return result
+
+    if seeds is None:
+        seeds = seed_centroids_nd(vectors, k, id_col, vec_col)
+    return _lloyd(vectors, seeds, step, moved, max_iter, threshold)
 
 
 def lloyd_partials_nd(

@@ -25,13 +25,16 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_kmeans_clustering_spark.operators.aggregate import members, update_centroids
+from mapreduce_kmeans_clustering_spark.operators.aggregate import members
 from mapreduce_kmeans_clustering_spark.operators.assign import assign
 from mapreduce_kmeans_clustering_spark.operators.silhouette import silhouette_ref
+from mapreduce_kmeans_clustering_spark.plans.kmeans import FitResult, displacement, fit
 from mapreduce_kmeans_clustering_spark.sources.points import points_from_lineitem
 from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid
 
 K = 5
+CONVERGE_THRESHOLD = 45.0  # stops at iter 7 (sf0.001) / 4 (sf0.01)
+CONVERGE_CAP = 8
 SIL_RID_LIMIT = 50_000  # deterministic ~2k-row subset for the O(n^2) silhouette ops
 
 # ---------------------------------------------------------------------------
@@ -130,7 +133,7 @@ def scale_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so memoize per (application, sf_dir). Values are plain Python lists —
 # caching them changes job count, never results.
 _SEEDS_CACHE: dict[tuple, list[Centroid]] = {}
-_CHAIN_CACHE: dict[tuple, list[Centroid]] = {}
+_CHAIN_FITS: dict[tuple, FitResult] = {}
 
 
 def scale_seeds(spark: SparkSession, sf_dir: str, k: int = K) -> list[Centroid]:
@@ -155,34 +158,28 @@ def scale_seeds(spark: SparkSession, sf_dir: str, k: int = K) -> list[Centroid]:
 
 
 def chain_centroids(spark: SparkSession, sf_dir: str, r: int) -> list[Centroid]:
-    """r Lloyd iterations with 6-decimal centroid rounding between
-    steps (the rounding is part of the declared query so Spark and the
-    SQL oracle stay on bit-identical centroids). Resumes from the
-    deepest memoized prefix chain (iteration i+1 is a pure function of
-    iteration i, so prefix reuse is exact)."""
-    app = spark.sparkContext.applicationId
-    pts = scale_points(spark, sf_dir)
-    done = 0
-    cents = scale_seeds(spark, sf_dir)
-    for cached_r in range(r, 0, -1):
-        if (app, sf_dir, cached_r) in _CHAIN_CACHE:
-            done, cents = cached_r, _CHAIN_CACHE[(app, sf_dir, cached_r)]
-            break
-    for step in range(done, r):
-        assigned = assign(pts, cents, keep_cols=["x", "y", "z"])
-        rows = (
-            update_centroids(assigned)
-            .select(
-                "id",
-                F.round("x", 6).alias("x"),
-                F.round("y", 6).alias("y"),
-                F.round("z", 6).alias("z"),
-            )
-            .collect()
+    """Centroids after r Lloyd iterations with 6-decimal rounding
+    between steps (the rounding is part of the declared query so Spark
+    and the SQL oracle stay on bit-identical centroids). Every r reads
+    one memoized CONVERGE_CAP-step fit per (application, sf_dir)."""
+    if not 1 <= r <= CONVERGE_CAP:
+        raise ValueError(f"chain depth must be in 1..{CONVERGE_CAP}, got {r}")
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _CHAIN_FITS:
+        _CHAIN_FITS[key] = fit(
+            scale_points(spark, sf_dir),
+            scale_seeds(spark, sf_dir),
+            max_iter=CONVERGE_CAP,
+            threshold=None,
+            round_decimals=6,
         )
-        cents = [Centroid(int(w["id"]), w["x"], w["y"], w["z"]) for w in rows]
-        _CHAIN_CACHE[(app, sf_dir, step + 1)] = cents
-    return cents
+    return _CHAIN_FITS[key].history[r - 1]
+
+
+def _centroids_df(spark: SparkSession, cents: list[Centroid]) -> DataFrame:
+    return spark.createDataFrame(
+        [tuple(c) for c in cents], schema="id INT, x DOUBLE, y DOUBLE, z DOUBLE"
+    )
 
 
 def _assigned1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -201,33 +198,18 @@ def q_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    upd = update_centroids(_assigned1(spark, sf_dir).select("cluster", "x", "y", "z"))
-    return upd.select(
-        "id",
-        F.round("x", 6).alias("x"),
-        F.round("y", 6).alias("y"),
-        F.round("z", 6).alias("z"),
-    )
+    """O7: the first Lloyd update, which is the chain's first step."""
+    return _centroids_df(spark, chain_centroids(spark, sf_dir, 1))
 
 
 def q_chain2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cents = chain_centroids(spark, sf_dir, 2)
-    return spark.createDataFrame(
-        [(c.id, c.x, c.y, c.z) for c in cents], schema="id INT, x DOUBLE, y DOUBLE, z DOUBLE"
-    )
+    return _centroids_df(spark, chain_centroids(spark, sf_dir, 2))
 
 
 def q_chain5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Centroids after 5 fixed Lloyd iterations — the scale twin of the
     reference's Task2 (numIterations = 5, Task2.java:144)."""
-    cents = chain_centroids(spark, sf_dir, 5)
-    return spark.createDataFrame(
-        [(c.id, c.x, c.y, c.z) for c in cents], schema="id INT, x DOUBLE, y DOUBLE, z DOUBLE"
-    )
-
-
-CONVERGE_THRESHOLD = 45.0  # stops at iter 7 (sf0.001) / 4 (sf0.01)
-CONVERGE_CAP = 8
+    return _centroids_df(spark, chain_centroids(spark, sf_dir, 5))
 
 
 def q_chain_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,8 +225,8 @@ def q_chain_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms over the ROUNDED centroid doubles — the same doubles the
     DuckDB oracle sums, so the stop decision agrees across engines
     (a disagreement would need the sum within one ulp of the
-    threshold). chain_centroids memoizes prefixes, so the loop extends
-    one iteration at a time, never recomputing."""
+    threshold). The stop is read off the memoized chain fit; no Lloyd
+    step runs here."""
     return _chain_converge(spark, sf_dir, CONVERGE_THRESHOLD)
 
 
@@ -262,27 +244,19 @@ def q_chain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _chain_converge(
     spark: SparkSession, sf_dir: str, threshold: float
 ) -> DataFrame:
-    import math
-
-    prev = sorted(scale_seeds(spark, sf_dir), key=lambda c: c.id)
-    stop = CONVERGE_CAP
-    cur = prev
-    for i in range(1, CONVERGE_CAP + 1):
-        cur = sorted(chain_centroids(spark, sf_dir, i), key=lambda c: c.id)
-        disp = sum(
-            math.sqrt(
-                (a.x - b.x) * (a.x - b.x)
-                + (a.y - b.y) * (a.y - b.y)
-                + (a.z - b.z) * (a.z - b.z)
-            )
-            for a, b in zip(prev, cur)
-        )
-        if disp < threshold:
-            stop = i
-            break
-        prev = cur
+    chain = [scale_seeds(spark, sf_dir)]
+    chain += [chain_centroids(spark, sf_dir, i) for i in range(1, CONVERGE_CAP + 1)]
+    # by id, like the oracle's JOIN USING (id), should a cluster empty out
+    stop = next(
+        (
+            i
+            for i in range(1, CONVERGE_CAP + 1)
+            if displacement(chain[i - 1], chain[i], strict=False) < threshold
+        ),
+        CONVERGE_CAP,
+    )
     return spark.createDataFrame(
-        [(c.id, c.x, c.y, c.z, stop) for c in cur],
+        [(*c, stop) for c in chain[stop]],
         schema="id INT, x DOUBLE, y DOUBLE, z DOUBLE, stop_iter INT",
     )
 
@@ -348,25 +322,12 @@ def q_sil(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_disp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O10 metric engine-side: seeds vs after-one-iteration centroids."""
-    seeds = scale_seeds(spark, sf_dir)
-    c1 = chain_centroids(spark, sf_dir, 1)
-    a = spark.createDataFrame(
-        [(c.id, c.x, c.y, c.z) for c in seeds], schema="id INT, x DOUBLE, y DOUBLE, z DOUBLE"
+    """O10 metric, as fit computes it: seeds vs after-one-iteration
+    centroids, matched by id like the oracle's join."""
+    d = displacement(
+        scale_seeds(spark, sf_dir), chain_centroids(spark, sf_dir, 1), strict=False
     )
-    b = spark.createDataFrame(
-        [(c.id, c.x, c.y, c.z) for c in c1], schema="id INT, x DOUBLE, y DOUBLE, z DOUBLE"
-    )
-    d = F.sqrt(
-        (a["x"] - b["x"]) * (a["x"] - b["x"])
-        + (a["y"] - b["y"]) * (a["y"] - b["y"])
-        + (a["z"] - b["z"]) * (a["z"] - b["z"])
-    )
-    return (
-        a.join(b, a["id"] == b["id"])
-        .select(d.alias("d"))
-        .agg(F.round(F.sum("d"), 4).alias("displacement"))
-    )
+    return spark.range(1).select(F.round(F.lit(d), 4).alias("displacement"))
 
 
 KMEANS_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
@@ -434,14 +395,10 @@ def _sql_chain_converge(threshold: float = CONVERGE_THRESHOLD) -> str:
         sql = sql.replace(f"{name} AS (", f"{name} AS MATERIALIZED (")
     for i in range(1, cap):
         sql += f",{_sql_assign('pts', f'c{i}', f'asg{i + 1}', mat=True)},{_sql_update(f'asg{i + 1}', f'c{i + 1}', mat=True)}"
-    dist = (
-        "sqrt((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)"
-        " + (a.z - b.z) * (a.z - b.z))"
-    )
     for i in range(1, cap + 1):
         prev_rel = "seeds" if i == 1 else f"c{i - 1}"
         sql += (
-            f",d{i} AS (SELECT sum({dist}) AS d"
+            f",d{i} AS (SELECT sum({_SQL_DIST_AB}) AS d"
             f" FROM {prev_rel} a JOIN c{i} b USING (id))"
         )
     stop_case = (

@@ -49,15 +49,21 @@ def spark():
     yield s
 
 
+def _require(path: str) -> str:
+    if not os.path.exists(path):
+        pytest.skip(f"reference input {path} is absent")
+    return path
+
+
 @pytest.fixture(scope="session")
 def ref_points(spark):
     from mapreduce_kmeans_clustering_spark.sources.points import read_points_csv
 
-    return read_points_csv(spark, REF_POINTS_CSV).cache()
+    return read_points_csv(spark, _require(REF_POINTS_CSV)).cache()
 
 
 @pytest.fixture(scope="session")
 def ref_seeds():
     from mapreduce_kmeans_clustering_spark.sources.seeds import load_seeds
 
-    return load_seeds(REF_SEEDS_CSV)
+    return load_seeds(_require(REF_SEEDS_CSV))

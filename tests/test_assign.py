@@ -3,10 +3,11 @@ empty-cluster drop, join-variant parity (SURVEY §5.3)."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
 from mapreduce_kmeans_clustering_spark import schemas
-from mapreduce_kmeans_clustering_spark.operators.aggregate import update_centroids
 from mapreduce_kmeans_clustering_spark.operators.assign import assign, assign_join
 from mapreduce_kmeans_clustering_spark.plans.kmeans import displacement, lloyd_iteration
 from mapreduce_kmeans_clustering_spark.sources.points import with_rid
@@ -15,6 +16,28 @@ from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid, seeds_df
 
 def make_points(spark, rows):
     return spark.createDataFrame(rows, schema=schemas.POINTS)
+
+
+@pytest.fixture(scope="module")
+def blob_points(spark):
+    """2,000 seeded points around five centres, spread over 8 partitions
+    so collected row order is whatever the shuffle makes it."""
+    rng = random.Random(20261017)
+    centres = [(0, 0, 0), (40, 5, 5), (5, 40, 5), (5, 5, 40), (30, 30, 30)]
+    rows = [
+        tuple(c + rng.gauss(0.0, 6.0) for c in centres[i % 5]) for i in range(2000)
+    ]
+    return make_points(spark, rows).repartition(8).cache()
+
+
+@pytest.fixture(scope="module")
+def blob_seeds():
+    return [
+        Centroid(i, float(x), float(y), float(z))
+        for i, (x, y, z) in enumerate(
+            [(1, 2, 3), (35, 0, 9), (0, 33, 1), (8, 2, 31), (25, 28, 36)]
+        )
+    ]
 
 
 def test_tie_breaks_to_lowest_index(spark):
@@ -40,10 +63,10 @@ def test_tie_break_three_way(spark):
     assert row["cluster"] == 0
 
 
-def test_sq_distance_same_argmin(spark, ref_points, ref_seeds):
-    a = assign(ref_points, ref_seeds).groupBy("cluster").count().orderBy("cluster")
+def test_sq_distance_same_argmin(spark, blob_points, blob_seeds):
+    a = assign(blob_points, blob_seeds).groupBy("cluster").count().orderBy("cluster")
     b = (
-        assign(ref_points, ref_seeds, use_sqrt=False)
+        assign(blob_points, blob_seeds, use_sqrt=False)
         .groupBy("cluster")
         .count()
         .orderBy("cluster")
@@ -69,10 +92,10 @@ def test_empty_cluster_drops(spark):
     assert displacement(seeds, out, strict=False) > 0
 
 
-def test_assign_join_matches_literal_assign(spark, ref_points, ref_seeds):
-    pts = with_rid(ref_points)
-    via_join = assign_join(pts, seeds_df(spark, ref_seeds))
-    via_lit = assign(pts, ref_seeds, keep_cols=["rid"])
+def test_assign_join_matches_literal_assign(spark, blob_points, blob_seeds):
+    pts = with_rid(blob_points)
+    via_join = assign_join(pts, seeds_df(spark, blob_seeds))
+    via_lit = assign(pts, blob_seeds, keep_cols=["rid"])
     mism = (
         via_join.select("rid", "cluster")
         .join(via_lit.select("rid", "cluster"), "rid")
@@ -82,10 +105,15 @@ def test_assign_join_matches_literal_assign(spark, ref_points, ref_seeds):
     assert mism == 0
 
 
-def test_cluster_ids_stable_and_sorted(spark, ref_points, ref_seeds):
-    out = update_centroids(assign(ref_points, ref_seeds, keep_cols=["x", "y", "z"]))
-    ids = [r["id"] for r in out.collect()]
-    assert ids == sorted(ids) == [0, 1, 2, 3, 4]
+def test_cluster_ids_stable_and_sorted(spark, blob_points, blob_seeds):
+    """update_centroids returns its K rows in no order; lloyd_iteration
+    sorts them by id on the driver, whatever the seed list order, and
+    every id is the seed id it came from."""
+    seeds = [c._replace(id=i) for c, i in zip(blob_seeds, (40, 7, 3, 22, 0))]
+    out = lloyd_iteration(blob_points, seeds)
+    assert [c.id for c in out] == [0, 3, 7, 22, 40]
+    assert lloyd_iteration(blob_points, seeds[::-1]) == out
+    assert lloyd_iteration(blob_points, out) == lloyd_iteration(blob_points, out[::-1])
 
 
 def test_negative_zero_seed_regression(spark):

@@ -8,9 +8,13 @@ the review signal wanted.
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
+from mapreduce_kmeans_clustering_spark import schemas
 from mapreduce_kmeans_clustering_spark.operators.assign import assign
+from mapreduce_kmeans_clustering_spark.plans import fit, fit_nd
 from mapreduce_kmeans_clustering_spark.sources.seeds import Centroid
 
 SF = "/root/testdata/sf0.001"
@@ -34,6 +38,113 @@ def test_assign_is_scan_local_no_shuffle(spark):
     p = _plan(labeled)
     assert "Join" not in p
     assert "Exchange" not in p
+
+
+def test_lloyd_iteration_plan_is_one_hash_exchange_no_sort(spark):
+    """One 3-D Lloyd step is a scan-local assign, a partial aggregate,
+    ONE hash Exchange of K rows per partition and the final aggregate;
+    the K collected rows are ordered on the driver, so no Sort and no
+    range-partitioning Exchange (an extra sampling job) in the plan,
+    rounded or not."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_kmeans_clustering_spark.operators.aggregate import update_centroids
+
+    pts = spark.read.parquet(f"{SF}/lineitem.parquet").select(
+        F.col("l_quantity").cast("double").alias("x"),
+        (F.col("l_extendedprice") / 100.0).alias("y"),
+        (F.col("l_discount") * 1000.0).alias("z"),
+    )
+    cents = [Centroid(0, 0.0, 0.0, 0.0), Centroid(1, 30.0, 300.0, 50.0)]
+    upd = update_centroids(assign(pts, cents, keep_cols=["x", "y", "z"]))
+    rounded = upd.select("id", *(F.round(c, 6).alias(c) for c in ("x", "y", "z")))
+    for p in (_plan(upd), _plan(rounded)):
+        assert p.count("Exchange") == 1 and "Exchange hashpartitioning" in p, p
+        assert "Sort" not in p and "rangepartitioning" not in p, p
+
+
+def _blobs_3d(spark):
+    rng = random.Random(11)
+    centres = [(0.0, 0.0, 0.0), (50.0, 0.0, 10.0), (10.0, 60.0, 30.0)]
+    rows = [tuple(c + rng.gauss(0.0, 4.0) for c in centres[i % 3]) for i in range(300)]
+    # one partition: a single partial sum per cluster, so reruns are bit-equal
+    pts = spark.createDataFrame(rows, schema=schemas.POINTS).coalesce(1).cache()
+    seeds = [Centroid(0, 0.0, 0.0, 0.0), Centroid(1, 2.0, 2.0, 2.0), Centroid(2, 4.0, 4.0, 4.0)]
+    return lambda **kw: fit(pts, seeds, **kw)
+
+
+def _blobs_nd(spark):
+    rng = random.Random(13)
+    rows = [
+        (i, [float(i % 3) * 40.0 + rng.gauss(0.0, 4.0) for _ in range(6)])
+        for i in range(240)
+    ]
+    vecs = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    vecs = vecs.coalesce(1).cache()
+    seeds = [[0.0] * 6, [2.0] * 6, [4.0] * 6]
+    return lambda **kw: fit_nd(vecs, k=3, seeds=seeds, **kw)
+
+
+@pytest.mark.parametrize("make_fit", [_blobs_3d, _blobs_nd], ids=["fit", "fit_nd"])
+def test_shared_lloyd_loop_stop_rule(spark, make_fit):
+    """fit and fit_nd share one loop: threshold=0.0 never stops early
+    (strict `<` against a non-negative sum) and exits at the cap; a
+    threshold between the second and third displacements stops right
+    after the third iteration and keeps its centroids
+    (Task3.java:198-212)."""
+    run = make_fit(spark)
+    capped = run(max_iter=5, threshold=0.0)
+    assert capped.iterations == 5 and not capped.converged
+    assert len(capped.history) == len(capped.displacements) == capped.iterations
+    assert capped.centroids == capped.history[-1]
+    d = capped.displacements
+    assert d[0] > d[1] > d[2]  # the seeds sit in one blob: several steps move
+    stopped = run(max_iter=5, threshold=(d[1] + d[2]) / 2)
+    assert stopped.converged and stopped.iterations == len(stopped.history) == 3
+    assert stopped.displacements == d[:3]
+    assert stopped.history == capped.history[:3]
+    assert stopped.centroids == capped.history[2]
+    free = run(max_iter=3, threshold=None)
+    assert free.iterations == len(free.history) == 3 and free.displacements == []
+    assert free.history == capped.history[:3]
+
+
+def test_fit_round_decimals_is_spark_round_of_each_step(spark):
+    """round_decimals=6 rounds inside the plan with Spark's round: each
+    history entry is F.round of the unrounded step from the previous
+    entry. A lone point at x=5e-7 rounds to 1e-06 (HALF_UP on the
+    decimal value), where Python's round() would give 0.0."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_kmeans_clustering_spark.operators.aggregate import update_centroids
+
+    rows = [(5e-7, 0.0, 0.0), (100.123456789, 3.3333333333, 7.0000005), (99.9, 2.7, 6.2)]
+    pts = spark.createDataFrame(rows, schema=schemas.POINTS).coalesce(1)
+    seeds = [Centroid(0, 0.0, 0.0, 0.0), Centroid(1, 100.0, 3.0, 7.0)]
+    res = fit(pts, seeds, max_iter=2, threshold=None, round_decimals=6)
+    prev = seeds
+    for cents in res.history:
+        raw = update_centroids(assign(pts, prev, keep_cols=["x", "y", "z"]))
+        want = sorted(
+            Centroid(*r)
+            for r in raw.select(
+                "id", *(F.round(c, 6).alias(c) for c in ("x", "y", "z"))
+            ).collect()
+        )
+        assert cents == want
+        prev = cents
+    assert res.history[0][0].x == 1e-06 != round(5e-7, 6)
+
+
+def test_fit_and_fit_nd_reject_empty_input(spark):
+    pts = spark.createDataFrame([], schema=schemas.POINTS)
+    with pytest.raises(ValueError, match="empty relation"):
+        fit(pts, [Centroid(0, 0.0, 0.0, 0.0)])
+    vecs = spark.createDataFrame([], "vec_id LONG, embedding ARRAY<DOUBLE>")
+    with pytest.raises(ValueError, match="empty relation"):
+        fit_nd(vecs, k=2)
+    with pytest.raises(ValueError, match="empty relation"):
+        fit_nd(vecs, k=2, seeds=[[0.0, 0.0], [1.0, 1.0]])
 
 
 def test_pricing_summary_partial_final_agg_and_pruned_scan(spark):

@@ -460,7 +460,7 @@ def _fit_converge():
     from mapreduce_kmeans_clustering_spark.plans.kmeans import fit, label
 
     def run(spark, sf_dir):
-        for cache in (Q._POINTS_CACHE, Q._SEEDS_CACHE, Q._CHAIN_CACHE):
+        for cache in (Q._POINTS_CACHE, Q._SEEDS_CACHE, Q._CHAIN_FITS):
             for v in list(cache.values()):
                 if hasattr(v, "unpersist"):
                     v.unpersist()
