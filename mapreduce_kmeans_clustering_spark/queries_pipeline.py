@@ -2,8 +2,7 @@
 dedup, similarity search, events analytics, TPC-H-style relational
 queries, multimodal features. Same contract as queries.py — each entry
 is (spark, sf_dir) -> DataFrame with a DuckDB oracle twin (including
-the mapInPandas-based q_media_features — its digest stub is md5 math
-DuckDB can replay).
+q_media_features — its digest stub is md5 math DuckDB can replay).
 
 Determinism notes mirror queries.py: md5 as the portable hash family,
 identical arithmetic shapes both sides, rounding on aggregates, ranks
@@ -194,9 +193,12 @@ _ANN_UNROLL_MIN_BYTES = int(
 
 
 def _ann_vec_dim(sf_dir: str, dim: int = 64) -> int | None:
+    path = f"{sf_dir}/embeddings.parquet"
+    if not os.path.isfile(path):  # directory input (real deployment): corpus-scale
+        return dim
     try:
-        size = os.path.getsize(f"{sf_dir}/embeddings.parquet")
-    except OSError:  # directory input (real deployment): corpus-scale
+        size = os.path.getsize(path)
+    except OSError:  # pragma: no cover - racing filesystem
         return dim
     return dim if size >= _ANN_UNROLL_MIN_BYTES else None
 
@@ -1124,9 +1126,9 @@ def q_region_rollup(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Multimodal: the digest-stub feature math is md5-over-utf8, so even the
-# mapInPandas path has an exact DuckDB oracle (the checksum terms are
-# binary fractions i/256 — rounding is exact in both engines).
+# Multimodal: the digest-stub feature math is md5-over-utf8, so it has
+# an exact DuckDB oracle (the checksum terms are binary fractions i/256
+# — rounding is exact in both engines).
 # ---------------------------------------------------------------------------
 
 

@@ -106,26 +106,3 @@ EVENTS = T.StructType(
         T.StructField("props", T.StringType(), nullable=True),
     ]
 )
-
-# Multimodal: media as opaque binary + typed metadata (extension; the
-# container has no image/audio codecs, so decode is stubbed).
-MEDIA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), nullable=False),
-        T.StructField("kind", T.StringType(), nullable=False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), nullable=True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.LongType(), True),
-                    T.StructField("codec", T.StringType(), True),
-                ]
-            ),
-            nullable=True,
-        ),
-    ]
-)

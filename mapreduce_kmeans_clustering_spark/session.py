@@ -1,8 +1,8 @@
 """SparkSession factory.
 
 Replaces the reference's per-job Hadoop ``Configuration`` wiring
-(e.g. Task1.java:104-118) with one shared session. Defaults are tuned
-for the local[32] test harness but every knob scales: AQE re-plans
+(e.g. Task1.java:104-118) with one shared session. Local parallelism
+defaults to the host's core count and every knob scales: AQE re-plans
 shuffles at runtime (skew joins, partition coalescing), shuffle
 partitions default to the core count, Arrow is on for the few
 Pandas-UDF operators, and the session timezone is pinned to UTC so
@@ -34,11 +34,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the shared SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism; on a real cluster
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: the host's
+    ``os.cpu_count()``); on a real cluster
     pass ``master`` / rely on spark-submit and the same code runs
     unchanged — nothing here assumes single-node.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1)))
     builder = SparkSession.builder.appName(app_name).master(
         master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     )

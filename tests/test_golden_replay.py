@@ -127,14 +127,8 @@ def test_task5a_chain_byte_exact_java_format(ref_points, ref_seeds):
         assert format_centroids_kv(cents, fmt="java").split("\n") == golden_lines, i
 
 
-def test_java_double_str_layout_and_golden_roundtrip():
-    """Layout rules against hand cases, then EVERY double string in
-    EVERY committed reference artifact must format back
-    byte-identically (2280 values: plain, large-magnitude, and the
-    full precision spread)."""
-    import glob
-    import re
-
+def test_java_double_str_layout():
+    """Layout rules against hand cases (no reference data needed)."""
     from mapreduce_kmeans_clustering_spark.sinks.text_kv import java_double_str as j
 
     cases = [
@@ -149,9 +143,23 @@ def test_java_double_str_layout_and_golden_roundtrip():
     ]
     for v, want in cases:
         assert j(v) == want, (v, want, j(v))
+
+
+def test_java_double_str_golden_roundtrip():
+    """EVERY double string in EVERY committed reference artifact must
+    format back byte-identically (2280 values: plain, large-magnitude,
+    and the full precision spread)."""
+    import glob
+    import os
+
+    from mapreduce_kmeans_clustering_spark.sinks.text_kv import java_double_str as j
+
+    out_dir = f"{REF}/output"
+    if not os.path.isdir(out_dir):
+        pytest.skip(f"reference output {out_dir} is absent")
     pat = re.compile(r"-?\d+\.\d+(?:[eE]-?\d+)?")
     n = 0
-    for f in glob.glob(f"{REF}/output/**/part-*", recursive=True):
+    for f in glob.glob(f"{out_dir}/**/part-*", recursive=True):
         for line in open(f):
             for s in pat.findall(line):
                 n += 1

@@ -89,25 +89,6 @@ def test_seed_centroids_deterministic(spark, X):
     assert s1 == s2 == [list(map(float, X[i])) for i in range(4)]
 
 
-@pytest.mark.slow  # 7-12 s band, sibling fast coverage kept (r13)
-def test_mllib_backend_clusters_reference_data(spark):
-    """Alternate MLlib backend: sane clustering on the reference CSV
-    (library semantics, not golden parity — documented)."""
-    from mapreduce_kmeans_clustering_spark.plans.mllib_backend import (
-        fit_mllib,
-        label_mllib,
-    )
-    from mapreduce_kmeans_clustering_spark.sources.points import read_points_csv
-
-    pts = read_points_csv(spark, "/root/reference/3d_points_dataset.csv")
-    res = fit_mllib(pts, k=5, max_iter=10, seed=7)
-    assert len(res.centroids) == 5 and res.cost > 0
-    labeled = label_mllib(pts, res)
-    counts = {r["cluster"]: r["count"] for r in labeled.groupBy("cluster").count().collect()}
-    assert sum(counts.values()) == 5000
-    assert set(counts) == {0, 1, 2, 3, 4}
-
-
 def test_fused_partials_equal_two_phase_update(spark):
     """lloyd_partials_nd (fused Arrow partials) == assign_nd +
     update_centroids_nd at 1e-9 on real embeddings — same clusters,

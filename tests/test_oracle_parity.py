@@ -148,10 +148,12 @@ def assert_dtype_classes(name, sdf, rel):
         )
 
 
-# The K-Means chain keys run in the default gate; the rest of the
-# registry is the slow batch (>=12 s in the idle full run, r13).
+# The K-Means chain keys and q_media_features run in the default gate;
+# the rest of the registry is the slow batch (>=12 s in the idle full
+# run, r13).
+DEFAULT_GATE = set(KMEANS_QUERIES) | {"q_media_features"}
 ALL = [
-    name if name in KMEANS_QUERIES else pytest.param(name, marks=pytest.mark.slow)
+    name if name in DEFAULT_GATE else pytest.param(name, marks=pytest.mark.slow)
     for name in sorted(entry_mod.queries().keys())
 ]
 

@@ -116,6 +116,22 @@ def test_dot_form_gate_is_value_invariant(emb):
     assert ia == ib and ia
 
 
+def test_ann_vec_dim_treats_directory_table_as_corpus_scale(tmp_path):
+    """A directory-shaped embeddings.parquet (a real multi-file table)
+    picks the unrolled form; a small single file picks the HOF form.
+    ``getsize`` on a directory returns the dirent size, not the data."""
+    from mapreduce_kmeans_clustering_spark.queries_pipeline import _ann_vec_dim
+
+    as_dir = tmp_path / "dir"
+    (as_dir / "embeddings.parquet").mkdir(parents=True)
+    (as_dir / "embeddings.parquet" / "part-00000.parquet").write_bytes(b"x" * 16)
+    assert _ann_vec_dim(str(as_dir)) == 64
+    as_file = tmp_path / "file"
+    as_file.mkdir()
+    (as_file / "embeddings.parquet").write_bytes(b"x" * 16)
+    assert _ann_vec_dim(str(as_file)) is None
+
+
 def test_ann_recall_floors(spark):
     """The tuning gate VERDICT asked for: measured recall@k of both ANN
     paths against exact top-k on the synthetic corpus. The registered
