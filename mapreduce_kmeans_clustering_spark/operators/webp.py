@@ -1,6 +1,6 @@
-"""WebP lossless (VP8L) decode + encode in pure stdlib — closing the
-WebP gap in ``decode_media`` (VERDICT r5 item 6 / r6 item 9) without a
-codec library, the same posture as ``operators/jpeg.py``.
+"""WebP lossless (VP8L) decode + encode in pure stdlib, without a codec
+library. No registered query calls it; it is a standalone codec kept
+with its spec tests (``tests/test_webp.py``).
 
 Scope (honest, test-pinned):
 
@@ -22,11 +22,7 @@ Scope (honest, test-pinned):
   deliberately naive; the point is spec-valid bytes whose decode is
   checked against the known source pixels.
 
-Reference parity note: the reference repo has no media path at all —
-this module exists for the multimodal-column extension surface
-(SURVEY §2 extensions; decode runs executor-side under Arrow
-``mapInPandas`` like the other codecs, payloads never touch the
-driver).
+Reference parity note: the reference repo has no media path at all.
 
 Bit order: VP8L is LSB-first within bytes for ReadBits; prefix-code
 bits are consumed MSB-of-code-first while walking the canonical tree
